@@ -4,20 +4,26 @@ The reference has no spatial joins — its only join is keyed find-or-create
 (``utils/FrostUtils.java:637-661``); the north rule adds PIP and kNN over
 the image table. Strategy (SURVEY.md §2.3):
 
-PIP  = cell-equi prefilter + exact refine:
-  1. cover every Feature polygon with H3-style cells at ``res``
-     (distributed ``mapInPandas`` over the features DF — no driver
-     geometry work, scales to arbitrarily many polygons),
-  2. equi-join images on the cell column — Catalyst broadcasts the cover
-     side when small (AQE converts at runtime otherwise) or shuffles on
-     the cell key for the bucketed variant,
-  3. refine candidate pairs with the vectorized ray-cast kernel in one
-     pandas UDF (polygon WKB travels with the candidate row; parsed once
-     per feature per batch).
+PIP  = broadcast polygons + exact refine, map-only (the default):
+  1. collect the polygons on the driver, bounded by
+     ``spark.sql.autoBroadcastJoinThreshold`` on their WKB bytes, and
+     broadcast them once as a ``PolygonSet``,
+  2. one ``mapInPandas`` pass over ``images(image_id, lat, lon)``: each
+     Arrow batch runs ``PolygonSet.match_points``, the vectorized
+     ray-cast kernel that skips every ring whose polygon bbox misses the
+     point.
+  No exchange and no join.
 
-The cover is a strict superset of cells containing any polygon point
-(dense grid at <= 0.35 x cell inradius + bbox expansion), so step 3 never
-misses a true match — verified against the brute-force numpy oracle in
+PIP, bucketed (polygon sets past the broadcast bound):
+  1. cover every polygon with H3 cells at ``res`` (distributed
+     ``mapInPandas``, one task per core),
+  2. shuffle equi-join images on the cell column,
+  3. refine the candidates; polygon WKB travels with the candidate row.
+  The cover is a strict superset of cells containing any polygon point
+  (dense grid at <= 0.35 x cell inradius + bbox expansion), so step 3
+  never misses a true match.
+
+Both variants are verified against the brute-force numpy oracle in
 ``tests/test_spatial.py``.
 
 kNN = sorted k-ring expansion + rank, with an exactness guarantee:
@@ -79,6 +85,14 @@ def _cover_cells_for_wkb(wkb: bytes, res: int) -> np.ndarray:
     return np.unique(np.concatenate(cells))
 
 
+def _polygon_rows(features: DataFrame) -> DataFrame:
+    """(feature_id, geometry) of the Polygon/MultiPolygon features."""
+    return features.filter(
+        F.col("geom_type").isin("Polygon", "MultiPolygon")
+        & F.col("geometry").isNotNull()
+    ).select("feature_id", "geometry")
+
+
 def polygon_cover(features: DataFrame, res: int) -> DataFrame:
     """features(feature_id, geometry WKB) -> (cell, feature_id) cover rows."""
 
@@ -86,8 +100,6 @@ def polygon_cover(features: DataFrame, res: int) -> DataFrame:
         for pdf in batches:
             ids, cells = [], []
             for fid, wkb in zip(pdf["feature_id"], pdf["geometry"]):
-                if wkb is None:
-                    continue
                 cc = _cover_cells_for_wkb(bytes(wkb), res)
                 cells.append(cc)
                 ids.extend([fid] * len(cc))
@@ -96,12 +108,13 @@ def polygon_cover(features: DataFrame, res: int) -> DataFrame:
                     {"cell": np.concatenate(cells), "feature_id": ids}
                 )
 
+    # a FeatureCollection parses as one task per *file*; cover math is
+    # per-polygon CPU, so spread polygons across the cluster first — one
+    # task per core: more tasks only add per-task Python start-up
+    n_parts = features.sparkSession.sparkContext.defaultParallelism
     return (
-        features.select("feature_id", "geometry", "geom_type")
-        .filter(F.col("geom_type").isin("Polygon", "MultiPolygon"))
-        # a FeatureCollection parses as one task per *file*; cover math is
-        # per-polygon CPU, so spread polygons across the cluster first
-        .repartition(32, "feature_id")
+        _polygon_rows(features)
+        .repartition(n_parts, "feature_id")
         .mapInPandas(gen, _COVER_SCHEMA)
     )
 
@@ -118,69 +131,81 @@ _PIP_REFINE_SCHEMA = T.StructType(
 )
 
 
+def _collect_polygons(features: DataFrame) -> tuple[list, list] | None:
+    """Stream the polygon rows to the driver -> (ids, wkbs), or ``None``
+    once their WKB bytes pass ``spark.sql.autoBroadcastJoinThreshold``
+    (or when that is -1): the broadcast stays under the same bound
+    Catalyst applies to its own broadcast joins.
+
+    ``toLocalIterator`` runs one Spark job per partition, one after the
+    other; ``prefetchPartitions`` overlaps each job with reading the
+    previous partition, so at most two partitions sit on the driver."""
+    conf = features.sparkSession._jsparkSession.sessionState().conf()
+    limit = conf.autoBroadcastJoinThreshold()
+    if limit < 0:
+        return None
+    ids, wkbs, n_bytes = [], [], 0
+    for r in _polygon_rows(features).toLocalIterator(prefetchPartitions=True):
+        wkb = bytes(r["geometry"])
+        n_bytes += len(wkb)
+        if n_bytes > limit:
+            # dropping the iterator tells the JVM to stop serving partitions
+            return None
+        ids.append(r["feature_id"])
+        wkbs.append(wkb)
+    return ids, wkbs
+
+
+def _pip_broadcast(images: DataFrame, ids: list, wkbs: list) -> DataFrame:
+    """Map-only PIP against broadcast polygons: no exchange, no join."""
+    bc = images.sparkSession.sparkContext.broadcast(G.PolygonSet(ids, wkbs))
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ps = bc.value
+        fids = np.asarray(ps.poly_ids, dtype=object)
+        for pdf in batches:
+            pt, poly = ps.match_points(
+                pdf["lon"].to_numpy(dtype=float), pdf["lat"].to_numpy(dtype=float)
+            )
+            if len(pt):
+                yield pd.DataFrame(
+                    {"image_id": pdf["image_id"].to_numpy()[pt], "feature_id": fids[poly]}
+                )
+
+    return images.select("image_id", "lat", "lon").mapInPandas(
+        run, _PIP_REFINE_SCHEMA
+    )
+
+
 def pip_join(
     images: DataFrame,
     features: DataFrame,
     res: int = 7,
     cell_col: str | None = None,
-    broadcast_cover: bool = True,
 ) -> DataFrame:
     """-> (image_id, feature_id) containment pairs.
 
-    ``broadcast_cover=True``: cover+geometry side is broadcast (the common
-    case — Feature sets are the dimension table, like the reference's
-    entity caches). ``False``: shuffle equi-join on the cell key for huge
-    polygon sets (bucketed variant); at 100 TB both sides pre-partitioned
-    by cell avoid the shuffle entirely.
+    Broadcast (the common case — Feature sets are the dimension table,
+    like the reference's entity caches): the polygons are collected now,
+    on the driver, and broadcast once; one map-only ``mapInPandas`` pass
+    over ``images(image_id, lat, lon)`` runs the bbox-prefiltered
+    ``PolygonSet.match_points`` per Arrow batch.
+
+    Bucketed, once the polygons' WKB passes
+    ``spark.sql.autoBroadcastJoinThreshold`` (or it is -1): cell cover of
+    every polygon at ``res``, shuffle equi-join with ``images[cell_col]``
+    (default ``h3_r{res}``), and refine; at 100 TB both sides
+    pre-partitioned by cell avoid the shuffle entirely. ``res`` and
+    ``cell_col`` only matter here.
     """
-    if cell_col is None:
-        cell_col = f"h3_r{res}"
+    polygons = _collect_polygons(features)
+    if polygons is not None:
+        return _pip_broadcast(images, *polygons)
+
+    # bucketed variant: geometry travels with the cover rows through
+    # the shuffle equi-join
+    cell_col = cell_col or f"h3_r{res}"
     cover = polygon_cover(features, res)
-
-    if broadcast_cover:
-        # r6: geometries ship ONCE as an sc.broadcast dict instead of
-        # riding every candidate row through the join and the Arrow
-        # boundary (each candidate previously carried its polygon's full
-        # WKB — guide §2.3: move keys, not payloads). The features side
-        # is the dimension table (same collect pattern as knn_join_map);
-        # the cover join now carries only (cell, feature_id).
-        spark = images.sparkSession
-        geo_rows = features.select("feature_id", "geometry").collect()
-        wkb_by_id = {
-            r["feature_id"]: bytes(r["geometry"])
-            for r in geo_rows
-            if r["geometry"] is not None
-        }
-        bc = spark.sparkContext.broadcast(wkb_by_id)
-
-        cand = images.select(
-            "image_id", "lat", "lon", F.col(cell_col).alias("cell")
-        ).join(F.broadcast(cover), "cell")
-
-        def refine_bc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            wkbs = bc.value
-            cache: dict[str, G.PolygonSet] = {}
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                keep = np.zeros(len(pdf), dtype=bool)
-                lon = pdf["lon"].to_numpy(dtype=float)
-                lat = pdf["lat"].to_numpy(dtype=float)
-                for fid, grp in pdf.groupby("feature_id", sort=False):
-                    ps = cache.get(fid)
-                    if ps is None:
-                        ps = G.PolygonSet([fid], [wkbs[fid]])
-                        cache[fid] = ps
-                    pos = pdf.index.get_indexer(grp.index.to_numpy())
-                    keep[pos] = ps.contains(lon[pos], lat[pos])[0]
-                out = pdf.loc[keep, ["image_id", "feature_id"]]
-                if len(out):
-                    yield out
-
-        return cand.mapInPandas(refine_bc, _PIP_REFINE_SCHEMA)
-
-    # bucketed variant (huge polygon sets): no driver collect — geometry
-    # travels with the cover rows through the shuffle equi-join
     geom = features.select("feature_id", "geometry")
     cover_geo = cover.join(geom, "feature_id")  # small x small
 

@@ -77,7 +77,9 @@ def build_pipeline(
     location_config: CreatorConfig | None = None,
     snapshot: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
-    """Construct every output DataFrame lazily; nothing executes here."""
+    """Construct every output DataFrame lazily. Two driver collects run
+    here: ``pip_join`` and ``knn_join`` each collect their dimension side
+    (polygons, location points) to build a broadcast index."""
     features = read_feature_collection(spark, features_path)
     images = with_cell_columns(read_images(spark, images_path))
 

@@ -2,6 +2,9 @@
 (SURVEY.md §5.5): cell assignment, PIP join (broadcast + bucketed), kNN,
 decode invariants, salted tiling == unsalted tiling."""
 
+import io
+from contextlib import contextmanager, nullcontext, redirect_stdout
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -9,6 +12,7 @@ from pyspark.sql import functions as F
 
 from gjspark.fixtures import generator as gen
 from gjspark.functions import codecs as C
+from gjspark.functions import geometry as G
 from gjspark.operators.cells import with_cell_columns
 from gjspark.operators.multimodal import decode_stats
 from gjspark.operators.spatial_join import knn_join, pip_join
@@ -65,13 +69,128 @@ def test_cell_assignment_matches_golden(images, fixtures_dir):
         assert (got[col].to_numpy() == exp[col].to_numpy()).all(), col
 
 
+def _plan_text(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain()
+    return buf.getvalue()
+
+
+@contextmanager
+def _broadcast_threshold(spark, value: str):
+    """Set ``spark.sql.autoBroadcastJoinThreshold`` for the block: the byte
+    bound that picks broadcast vs bucketed PIP ("-1" forces bucketed)."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, before)
+
+
 @pytest.mark.parametrize("broadcast", [True, False])
-def test_pip_join_matches_golden(images, features, fixtures_dir, broadcast):
-    got = pip_join(images, features, broadcast_cover=broadcast).toPandas()
+def test_pip_join_matches_golden(spark, images, features, fixtures_dir, broadcast):
+    # a -1 byte bound disables the broadcast: the bucketed cell-cover path
+    with nullcontext() if broadcast else _broadcast_threshold(spark, "-1"):
+        df = pip_join(images, features)
+        assert ("Join" in _plan_text(df)) != broadcast
+        got = df.toPandas()
     exp = pd.read_parquet(f"{fixtures_dir}/expected_pip.parquet")
     got_set = set(zip(got["image_id"], got["feature_id"]))
     exp_set = set(zip(exp["image_id"], exp["feature_id"]))
     assert got_set == exp_set
+
+
+def _square(x0, y0, x1, y1):
+    return np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]], dtype=float)
+
+
+@pytest.fixture(scope="module")
+def adversarial_pip(spark):
+    """Hand-built PIP case: holes, far-apart MultiPolygon parts, one
+    polygon far larger than the rest, points on bbox edges and vertices,
+    NaN and null coordinates."""
+    x, y = 8.0, 50.0
+    shapes = {
+        "holed": G.polygon_wkb(
+            [_square(x, y, x + 0.04, y + 0.04), _square(x + 0.01, y + 0.01, x + 0.03, y + 0.03)]
+        ),
+        "split": G.multipolygon_wkb(
+            [[_square(x + 0.1, y, x + 0.11, y + 0.01)], [_square(x - 2, y - 2, x - 1.99, y - 1.99)]]
+        ),
+        "huge": G.polygon_wkb([_square(x - 0.5, y - 0.5, x + 0.5, y + 0.5)]),
+        "tri": G.polygon_wkb(
+            [np.array([[x + 0.2, y], [x + 0.21, y], [x + 0.205, y + 0.01], [x + 0.2, y]])]
+        ),
+        "mid": G.polygon_wkb([_square(x + 0.3, y + 0.3, x + 0.35, y + 0.35)]),
+    }
+    # small squares at unaligned offsets, a few H3 r7 cells wide at most
+    tiny = [
+        (x + 0.023 * i + 0.001, y - 0.1 + 0.003 * i, 0.008 + 0.001 * i) for i in range(6)
+    ] + [(x + 0.6, y + 0.6, 0.01)]
+    shapes.update(
+        (f"tiny{i}", G.polygon_wkb([_square(tx, ty, tx + d, ty + d)]))
+        for i, (tx, ty, d) in enumerate(tiny)
+    )
+    features = spark.createDataFrame(
+        [(fid, G.parse_wkb(wkb)[0], wkb) for fid, wkb in shapes.items()]
+        + [("point", "Point", G.point_wkb(x + 0.02, y + 0.02))],
+        "feature_id string, geom_type string, geometry binary",
+    )
+    pts = [
+        (x + 0.005, y + 0.005),  # in the holed ring, and in huge
+        (x + 0.02, y + 0.02),  # in the hole
+        (x, y), (x + 0.04, y + 0.04), (x + 0.04, y + 0.02), (x + 0.02, y),  # holed bbox corners/edges
+        (x + 0.01, y + 0.01), (x + 0.03, y + 0.02),  # hole vertex / hole edge
+        (x + 0.105, y + 0.005), (x - 1.995, y - 1.995), (x - 1, y - 1),  # split parts / between
+        (x + 0.205, y + 0.01), (x + 0.2, y), (x + 0.204, y + 0.002),  # tri vertices, interior
+        (x + 0.5, y + 0.5), (x - 0.5, y), (x + 0.49, y - 0.49),  # huge corner, edge, interior
+        (x + 0.3, y + 0.325), (x + 0.325, y + 0.325), (x + 0.35, y + 0.35),  # mid
+        (x + 1, y + 1), (x - 170, y - 40),  # outside everything
+    ]
+    for tx, ty, d in tiny:  # centre, near the far corner, on the near edge
+        pts += [(tx + d / 2, ty + d / 2), (tx + d - 1e-4, ty + d - 1e-4), (tx, ty + d / 2)]
+    rows = [(f"p{i}", la, lo) for i, (lo, la) in enumerate(pts)]
+    rows += [("nan_lat", float("nan"), x), ("nan_lon", y, float("nan")), ("null", None, None)]
+    images = with_cell_columns(
+        spark.createDataFrame(rows, "image_id string, lat double, lon double")
+    )
+    lon = np.array([r[2] if r[2] is not None else np.nan for r in rows], dtype=float)
+    lat = np.array([r[1] if r[1] is not None else np.nan for r in rows], dtype=float)
+    ids = list(shapes)
+    pt, po = G.PolygonSet(ids, list(shapes.values())).match_points(lon, lat)
+    brute = {(rows[i][0], ids[j]) for i, j in zip(pt, po)}
+    return images, features, brute
+
+
+def _pairs(df) -> set:
+    pdf = df.toPandas()
+    assert not pdf.duplicated().any()
+    return set(zip(pdf["image_id"], pdf["feature_id"]))
+
+
+def test_pip_broadcast_equals_bucketed_and_brute_force(spark, adversarial_pip):
+    images, features, brute = adversarial_pip
+    assert len(brute) > 10
+    bc = pip_join(images, features)
+    plan = _plan_text(bc)
+    assert "Exchange" not in plan and "Join" not in plan, plan
+    assert _pairs(bc) == brute
+    empty = features.filter(F.lit(False))
+    assert _pairs(pip_join(images, empty)) == set()
+    with _broadcast_threshold(spark, "-1"):
+        assert _pairs(pip_join(images, features)) == brute
+        assert _pairs(pip_join(images, empty)) == set()
+
+
+@pytest.mark.parametrize("threshold", ["16", "-1"])
+def test_pip_broadcast_falls_back_past_byte_bound(spark, adversarial_pip, threshold):
+    images, features, brute = adversarial_pip
+    with _broadcast_threshold(spark, threshold):
+        got = pip_join(images, features)
+        assert "Exchange" in _plan_text(got)
+        assert _pairs(got) == brute
 
 
 def test_knn_matches_golden(images, locations, fixtures_dir):

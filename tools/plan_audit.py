@@ -3,7 +3,7 @@
 pruning (ReadSchema), predicate pushdown (PushedFilters), broadcast vs
 shuffle joins, and WholeStageCodegen spans.
 
-Usage: python tools/plan_audit.py [q_name ...]
+Usage: python tools/plan_audit.py [q_name ...]   (named: rewrite only those sections)
 """
 
 from __future__ import annotations
@@ -53,7 +53,11 @@ COMMENT = {
     ),
     "q_ann_topk": "broadcast index; single mapInPandas scoring pass",
     "q_cells": "one ArrowEvalPython node computes all 7 cell columns in a single pass",
-    "q_pip": "cover side broadcast; equi-join on the cell key; vectorized refine",
+    "q_pip": (
+        "map-only: one mapInPandas over (image_id, lat, lon) against the "
+        "broadcast polygons — no exchange, no join, and the "
+        "cell UDF is pruned from the scan side"
+    ),
     "q_knn": "map-only: zero exchanges below the final collect",
     "q_tile_rollup": "aggregation over the decoded features (stat rows only through the exchange)",
     "q_mosaic": "explicit-count hash exchange of delta+zlib-compressed thumbs; one vectorized merge per partition",
@@ -106,6 +110,12 @@ def main():
     spark = get_spark("plan-audit")
     qs = E.queries()
     out_path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCH", "PLANS.md")
+    # named queries replace their own sections; every other section stays
+    sections = {}
+    if sys.argv[1:] and os.path.exists(out_path):
+        with open(out_path) as f:
+            for part in f.read().split("\n## ")[1:]:
+                sections[part.split("\n", 1)[0]] = "\n## " + part.rstrip("\n") + "\n"
     with open(out_path, "w") as f:
         f.write(
             "# Physical plan audit (`.explain(\"formatted\")`)\n\n"
@@ -118,13 +128,12 @@ def main():
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-            f.write(f"\n## {name}\n\n")
+            text = f"\n## {name}\n\n"
             if name in COMMENT:
-                f.write(f"_{COMMENT[name]}_\n")
-            f.write("\n```\n")
-            f.write(buf.getvalue().strip())
-            f.write("\n```\n")
+                text += f"_{COMMENT[name]}_\n"
+            sections[name] = text + "\n```\n" + buf.getvalue().strip() + "\n```\n"
             print(f"{name}: ok")
+        f.write("".join(sections.values()))
     print(f"wrote {out_path}")
 
 
