@@ -1,4 +1,4 @@
-"""Multimodal (image) operators: decode, verify, feature-extract, resize.
+"""Multimodal (image) operators: decode, verify, feature-extract.
 
 Images are opaque ``binary`` columns with typed metadata (input_hint
 schema). All pixel work happens in ``mapInPandas`` over Arrow batches with
@@ -17,7 +17,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gjspark.functions import codecs as C
@@ -109,60 +108,6 @@ def decode_stats(images: DataFrame) -> DataFrame:
 
     cols = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]
     return images.select(*cols).mapInPandas(run, DECODE_STATS_SCHEMA)
-
-
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType()),
-        T.StructField("rw", T.IntegerType()),
-        T.StructField("rh", T.IntegerType()),
-        T.StructField("pixels", T.BinaryType()),
-    ]
-)
-
-
-def resize_images(images: DataFrame, out_w: int = 32, out_h: int = 32) -> DataFrame:
-    """Decode + area-resize to (out_h, out_w); emits raw RGB bytes.
-    Feature-extraction pattern for training pipelines (thumbnailing,
-    embedding preprocessing)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from gjspark.functions.codecs import _resize_matrix
-
-        rm_cache: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}
-        for pdf in batches:
-            ids, blobs = [], []
-            for b, f, iid in zip(pdf["bytes"], pdf["fmt"], pdf["image_id"]):
-                try:
-                    img = _decode_one(bytes(b), f)
-                except (NotImplementedError, ValueError):
-                    continue
-                key = img.shape[:2]
-                if key not in rm_cache:
-                    rm_cache[key] = (
-                        _resize_matrix(key[0], out_h),
-                        _resize_matrix(key[1], out_w),
-                    )
-                A, B = rm_cache[key]
-                cf = img.transpose(2, 0, 1).astype(np.float64)  # (3, h, w)
-                small = (
-                    np.clip(A @ cf @ B.T, 0, 255)
-                    .astype(np.uint8)
-                    .transpose(1, 2, 0)
-                )
-                ids.append(iid)
-                blobs.append(small.tobytes())
-            if ids:
-                yield pd.DataFrame(
-                    {
-                        "image_id": ids,
-                        "rw": out_w,
-                        "rh": out_h,
-                        "pixels": blobs,
-                    }
-                )
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(run, RESIZE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

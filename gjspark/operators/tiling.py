@@ -38,68 +38,6 @@ from gjspark.functions import codecs as C
 
 TILE = 16  # pixels per tile edge
 
-TILES_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType()),
-        T.StructField("cell", T.LongType()),
-        T.StructField("tile_x", T.IntegerType()),
-        T.StructField("tile_y", T.IntegerType()),
-        T.StructField("tile_w", T.IntegerType()),
-        T.StructField("tile_h", T.IntegerType()),
-        T.StructField("tile_mean", T.DoubleType()),
-        T.StructField("tile", T.BinaryType()),
-    ]
-)
-
-
-def explode_tiles(
-    images: DataFrame, cell_col: str = "h3_r7", with_bytes: bool = True
-) -> DataFrame:
-    """Decode each image and emit one row per TILE x TILE pixel tile."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows_id, rows_cell, tx, ty, tw, th, tmean, tbytes = (
-                [], [], [], [], [], [], [], [],
-            )
-            for iid, cell, b, f in zip(
-                pdf["image_id"], pdf["cell"], pdf["bytes"], pdf["fmt"]
-            ):
-                try:
-                    img = C.decode_image(bytes(b), f)
-                except (ValueError, NotImplementedError):
-                    continue
-                h, w, _ = img.shape
-                for y0 in range(0, h, TILE):
-                    for x0 in range(0, w, TILE):
-                        t = img[y0 : y0 + TILE, x0 : x0 + TILE]
-                        rows_id.append(iid)
-                        rows_cell.append(cell)
-                        tx.append(x0 // TILE)
-                        ty.append(y0 // TILE)
-                        tw.append(t.shape[1])
-                        th.append(t.shape[0])
-                        tmean.append(float(t.mean()))
-                        tbytes.append(t.tobytes() if with_bytes else b"")
-            if rows_id:
-                yield pd.DataFrame(
-                    {
-                        "image_id": rows_id,
-                        "cell": np.array(rows_cell, dtype=np.int64),
-                        "tile_x": np.array(tx, dtype=np.int32),
-                        "tile_y": np.array(ty, dtype=np.int32),
-                        "tile_w": np.array(tw, dtype=np.int32),
-                        "tile_h": np.array(th, dtype=np.int32),
-                        "tile_mean": tmean,
-                        "tile": tbytes,
-                    }
-                )
-
-    return images.select(
-        "image_id", F.col(cell_col).alias("cell"), "bytes", "fmt"
-    ).mapInPandas(run, TILES_SCHEMA)
-
-
 _IMG_TILE_SCHEMA = T.StructType(
     [
         T.StructField("image_id", T.StringType()),

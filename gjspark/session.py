@@ -4,6 +4,20 @@ Arrow on (every custom kernel is a pandas/Arrow UDF), AQE on (runtime
 skew/broadcast re-planning), shuffle partitions sized to cores rather than
 the 200 default. At cluster scale the same factory is used via
 ``spark-submit --py-files gjspark.zip`` (see ``gjspark/plans/job.py``).
+
+Python workers fork from ``gjspark.worker_daemon``, not the stock
+``pyspark.daemon``. Spark's worker calls ``importlib.invalidate_caches()``
+before every task, and on CPython 3.11 that re-reads the central directory
+of ``pyspark.zip`` and the other worker-path zips once per importer:
+~0.5 s of CPU per task, more than most kernels here take. The daemon
+re-reads an archive only when it changed, so ``addPyFile`` still works.
+It is always on because every engine stage is a Python task. It ships
+nothing new: each gjspark UDF is pickled by reference to ``gjspark``, so
+the workers import the package anyway. But the daemon starts before any
+task has shipped ``--py-files``, so the session also puts the directory or
+zip the driver imported ``gjspark`` from on the workers' ``PYTHONPATH``.
+That path exists under a local master; on a cluster whose executors lack
+it, ``gjspark`` must be installed or on their ``PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -101,6 +115,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("GJSPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "gjspark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", REPO_ROOT)
     )
     # Shuffle/spill scratch: the sandbox's virtual disk writes at tens of
     # MB/s, which makes any shuffle look like a scaling wall (a pure
